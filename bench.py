@@ -266,7 +266,6 @@ def main() -> None:
     results: dict[str, float] = {}
 
     # ---- crawl-epoch throughput ------------------------------------------
-    cfg = CrawlConfig(per_host_budget=10**9, num_partitions=2 * CPUS)
     # BENCH_CORPUS_DIR lets the scaling harness share one generated corpus
     # across parallelism levels (same input, two cluster sizes)
     corpus_dir = os.environ.get("BENCH_CORPUS_DIR")
@@ -291,46 +290,41 @@ def main() -> None:
         seeds = spark.read.parquet(seeds_path)
         robots = gen_robots(spark, n_feeds, partitions=2 * CPUS)
 
-        # Bucketed fetch layout is the DEFAULT (BENCH_SHUFFLE=1 opts
-        # out): the epoch reads html in place from a url-bucketed pages
-        # table (J3 production layout, sources/bucketed.py) instead of
-        # the shuffled join.  On local tmpfs the two are wall-equal
-        # (equality proven in test_plans; the shuffle is hidden by
-        # page-cache bandwidth) but at 100 TB over a real network the
-        # bucketed layout is the correct one — html bytes never cross
-        # an exchange — so the bench measures the layout production
-        # would run.  Ingest is one-time setup (untimed), like the
-        # corpus generation; the bucket count is a fixed table property
-        # so every parallelism leg shares one layout.
-        use_bucketed = not os.environ.get("BENCH_SHUFFLE")
-        if use_bucketed:
-            from podcast_crawler_spark.sources.bucketed import (
-                register_bucketed_pages,
-                write_bucketed_pages,
-            )
+        # Bucketed fetch layout: the epoch reads html in place from a
+        # url-bucketed pages table (J3 production layout,
+        # sources/bucketed.py).  On local tmpfs this is wall-equal to
+        # the same join over the plain pages DataFrame (equality proven
+        # in test_plans; the shuffle is hidden by page-cache bandwidth)
+        # but at 100 TB over a real network the bucketed layout is the
+        # correct one — html bytes never cross an exchange — so the bench
+        # measures the layout production would run.  Ingest is one-time
+        # setup (untimed), like the corpus generation; the bucket count
+        # is a fixed table property so every parallelism leg shares one
+        # layout.
+        from podcast_crawler_spark.sources.bucketed import (
+            register_bucketed_pages,
+            write_bucketed_pages,
+        )
 
-            buckets = 64
-            wh = spark.conf.get("spark.sql.warehouse.dir")
-            # size-keyed location: a shared corpus dir serves several
-            # BENCH_FEEDS values, and reusing a bucketed table built
-            # from a smaller corpus silently drops html for every url
-            # beyond it (parsed collapses while scheduled stays full)
-            btable = f"pages_bucketed_{n_feeds}"
-            loc = os.path.join(wh.removeprefix("file:"), btable)
-            if os.path.exists(os.path.join(loc, "_SUCCESS")):
-                register_bucketed_pages(
-                    spark, loc, btable, buckets=buckets
-                )
-            else:
-                write_bucketed_pages(
-                    pages, btable, buckets=buckets,
-                    one_file_per_bucket=True,
-                )
-            cfg = CrawlConfig(
-                per_host_budget=10**9,
-                num_partitions=2 * CPUS,
-                pages_bucketed_table=btable,
+        buckets = 64
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        # size-keyed location: a shared corpus dir serves several
+        # BENCH_FEEDS values, and reusing a bucketed table built
+        # from a smaller corpus silently drops html for every url
+        # beyond it (parsed collapses while scheduled stays full)
+        btable = f"pages_bucketed_{n_feeds}"
+        loc = os.path.join(wh.removeprefix("file:"), btable)
+        if os.path.exists(os.path.join(loc, "_SUCCESS")):
+            register_bucketed_pages(spark, loc, btable, buckets=buckets)
+        else:
+            write_bucketed_pages(
+                pages, btable, buckets=buckets, one_file_per_bucket=True
             )
+        cfg = CrawlConfig(
+            per_host_budget=10**9,
+            num_partitions=2 * CPUS,
+            pages_bucketed_table=btable,
+        )
 
         # frontier build is one-time setup, not epoch work — init untimed.
         # BENCH_REPEATS>1 reruns the epoch on fresh state and keeps the
@@ -387,8 +381,7 @@ def main() -> None:
         "parsed": parsed,
         "wall_s": round(crawl_wall, 3),
         "urls_per_sec": urls_per_sec,
-        "fetch_layout": "shuffle" if os.environ.get("BENCH_SHUFFLE")
-        else "bucketed",
+        "fetch_layout": "bucketed",
     }
     detail = {
         "metric": (

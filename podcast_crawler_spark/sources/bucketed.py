@@ -3,24 +3,25 @@
 ``fetch_join`` (J3) left-joins the scheduled frontier slice against the
 pages table on ``url``.  At 10^10-page scale the pages side carries
 multi-KB html blobs — the one column that must NEVER cross an exchange.
-The production answer (noted in ``operators/frontier.fetch_join``) is a
-pages table **bucketed by url**: Spark's bucketing pre-hashes the rows
-into B files per partition at WRITE time, so every later equi-join on
-``url`` reads each bucket co-located and only the (narrow) probe side
-shuffles — the html blobs move zero times.
+The production answer is a pages table **bucketed by url**: Spark's
+bucketing pre-hashes the rows into B files per partition at WRITE time,
+so every later equi-join on ``url`` reads each bucket co-located and only
+the (narrow) probe side shuffles — the html blobs move zero times.
 
 This module materializes that contract with ``DataFrameWriter.bucketBy``
 (Hive-style bucketed table in the session catalog — on a cluster this is
-the Iceberg/Hive table the ingest job maintains) and provides the join
-that exploits it.  ``tests/test_plans.py`` asserts the physical plan:
-no Exchange above the bucketed pages scan, shuffle only on the
-scheduled side.
+the Iceberg/Hive table the ingest job maintains) and binds ``fetch_join``
+to it; the join reads the bucket spec from the scan.
+``tests/test_plans.py`` asserts the physical plan: no Exchange above the
+bucketed pages scan, shuffle only on the scheduled side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..operators.frontier import fetch_join
 
 
 def write_bucketed_pages(
@@ -80,20 +81,18 @@ def register_bucketed_pages(
 def fetch_join_bucketed(
     scheduled: DataFrame, spark: SparkSession, table: str = "pages_bucketed"
 ) -> DataFrame:
-    """J3 against the bucketed pages table: the scheduled (narrow) side
-    shuffles into the pages bucketing; the html side is read in place.
-    Output schema matches ``operators/frontier.fetch_join``.
+    """J3 against the bucketed pages table: ``fetch_join`` over the
+    catalog table, so the scheduled (narrow) side shuffles into the pages
+    bucketing and the html side is read in place.
 
-    The ``SHUFFLE_HASH`` hint on the *scheduled* side pins the hash-map
-    build there (build-left left-outer SHJ): without it the planner
-    builds on the right leg, i.e. copies every html blob into a hash
-    map before probing — measured 59 s vs 45 s for the whole
-    join+parse prefix at 1.2M feeds/local[32]
-    (tools/parse_stage_experiment.py).  With build-left the html side
-    STREAMS from the bucket files straight into the parse."""
-    pg = spark.table(table).select("url", "html", "warc_ts")
-    joined = scheduled.hint("shuffle_hash").join(pg, "url", "left")
-    return joined.withColumn("fetch_ok", F.col("html").isNotNull())
+    The build-left hint inside ``fetch_join`` matters here: without it
+    the planner builds on the pages leg, i.e. copies every html blob into
+    a hash map before probing — measured 59 s vs 45 s for the whole
+    join+parse prefix at 1.2M feeds/local[32] (with
+    tools/parse_stage_experiment.py, since removed and kept in git
+    history).  With build-left the html side STREAMS from the bucket
+    files straight into the parse."""
+    return fetch_join(scheduled, spark.table(table))
 
 
 def z_order_key(a, b, bits: int = 16):

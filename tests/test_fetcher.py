@@ -4,6 +4,7 @@ failure → retry path, and end-to-end equality with the pages-join mode."""
 from __future__ import annotations
 
 import time
+import zlib
 from datetime import datetime, timezone
 
 import pytest
@@ -90,7 +91,7 @@ def test_live_fetch_errors_feed_retry_path(spark, corpus):
     scheduled, _, page_map = corpus
 
     def flaky(url, timeout_s, user_agent):
-        if hash(url) % 3 == 0:
+        if zlib.crc32(url.encode()) % 3 == 0:
             raise TimeoutError("simulated network timeout")
         return page_map.get(url)
 
@@ -187,9 +188,10 @@ def test_live_fetch_real_socket_end_to_end(spark, tmp_path):
     try:
         base = f"http://127.0.0.1:{port}"
         rows = []
-        for h in ("a", "b"):
+        # fixed host_hash constants (str hash() is salted per process)
+        for h, hh in (("a", 0), ("b", 1)):
             for i in range(3):
-                rows.append((f"{base}/feed/{h}/{i}", h, hash(h) & 7, i))
+                rows.append((f"{base}/feed/{h}/{i}", h, hh, i))
         rows.append((f"{base}/missing/x", "c", 2, 0))
         rows.append((f"{base}/slow/y", "d", 3, 0))
         rows.append(("file:///etc/hostname", "e", 4, 0))  # scheme gate

@@ -369,6 +369,58 @@ def test_bucketed_fetch_join_no_pages_exchange(spark, tmp_path):
         spark.sql("drop table if exists pages_bucketed_t")
 
 
+def test_fetch_join_plain_pages_builds_on_scheduled_side(spark):
+    """The same fetch join over a plain (unbucketed) pages DataFrame plans
+    a shuffled hash join that builds on the narrow scheduled side: the
+    html column streams through the probe and never fills a hash map.
+    Rows equal an unhinted left join."""
+    from podcast_crawler_spark.operators.frontier import (
+        CrawlConfig,
+        build_frontier,
+        fetch_join,
+        schedule_epoch,
+    )
+    from podcast_crawler_spark.sources.pagesgen import (
+        EPOCH0,
+        gen_pages,
+        gen_robots,
+        gen_seeds,
+    )
+
+    n = 120
+    cfg = CrawlConfig(per_host_budget=100, num_partitions=4)
+    pages = gen_pages(spark, n, partitions=4)
+    sched = schedule_epoch(
+        build_frontier(gen_seeds(spark, n, partitions=4), EPOCH0, cfg),
+        gen_robots(spark, n),
+        EPOCH0,
+        cfg,
+    )
+    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        joined = fetch_join(sched, pages)
+        plan = plan_of(joined)
+        join_line = next(
+            l for l in plan.splitlines() if "Join" in l and "url" in l
+        )
+        assert "ShuffledHashJoin" in join_line, plan
+        assert "LeftOuter, BuildLeft" in join_line, plan
+        got = {
+            tuple(r)
+            for r in joined.select("url", "url_hash", "fetch_ok").collect()
+        }
+        want = {
+            tuple(r)
+            for r in sched.join(pages.select("url", "html"), "url", "left")
+            .select("url", "url_hash", F.col("html").isNotNull())
+            .collect()
+        }
+        assert got == want
+        assert any(not ok for (_, _, ok) in got)  # misses survive the join
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
+
 def test_delta_schema_evolution_merges(spark, tmp_path):
     """Merge-on-read schema evolution: a delta segment adding a column
     reads merged (older rows null in the new column) and LWW still
